@@ -189,19 +189,26 @@ def scd2_merge(
     )
 
 
+_MERGE_FNS = {"sum": F.sum, "min": F.min, "max": F.max}
+
+
 def rollup_merge(
     existing: DataFrame,
     batch_partial: DataFrame,
     keys: list[str],
-    merge_cols: list[str],
+    merge_cols: list[str] | dict[str, str],
 ) -> DataFrame:
     """Merge a new batch's partial aggregate into an existing rollup
-    table — incremental view maintenance for additive aggregates, the
-    batch analog of the streaming ``run_continuous_rollup``.  Every
-    ``merge_cols`` column must be RE-AGGREGATABLE (counts, integer-cent
-    sums, min/max as separate sums is on the caller): merged value =
-    sum of partials, so a day's load touches only batch-sized input and
-    the rollup table, never the 100 TB history.
+    table — incremental view maintenance for re-aggregatable
+    aggregates, the batch analog of the streaming
+    ``run_continuous_rollup``.  ``merge_cols`` is a list of summed
+    columns or a ``{col: "sum"|"min"|"max"}`` spec — the three
+    self-decomposable aggregates (merge of partials = aggregate of the
+    union), so a day's load touches only batch-sized input and the
+    rollup table, never the 100 TB history.  The min/max legs are what
+    keeper-style state needs — e.g. the substring-scrub keeper
+    "smallest (doc, offset) that ever carried this window content" is a
+    plain min-merge.
 
     Non-additive stats derive at READ time from additive parts — avg =
     sum/count, variance from (n, Σx, Σx²) — which is why the table
@@ -211,45 +218,18 @@ def rollup_merge(
     keyed-small (group cardinality, not event cardinality); both sides
     partial-aggregate map-side before the single exchange.
     """
-    return (
-        existing.select(*keys, *merge_cols)
-        .unionByName(batch_partial.select(*keys, *merge_cols))
-        .groupBy(*keys)
-        .agg(*[F.sum(c).alias(c) for c in merge_cols])
+    spec = (
+        merge_cols if isinstance(merge_cols, dict)
+        else dict.fromkeys(merge_cols, "sum")
     )
-
-
-_MERGE_FNS = {"sum": F.sum, "min": F.min, "max": F.max}
-
-
-def rollup_merge_mixed(
-    existing: DataFrame,
-    batch_partial: DataFrame,
-    keys: list[str],
-    merge_spec: dict[str, str],
-) -> DataFrame:
-    """:func:`rollup_merge` generalized to per-column merge functions
-    (round 12): ``merge_spec`` maps each merged column to ``'sum'``,
-    ``'min'`` or ``'max'`` — the three self-decomposable aggregates
-    (merge of partials = aggregate of the union), so the same
-    incremental-view-maintenance contract holds: a batch load touches
-    only batch-sized partials and the rollup table, never history.
-    The min/max legs are what keeper-style state needs — e.g. the
-    substring-scrub keeper "smallest (doc, offset) that ever carried
-    this window content" is a plain min-merge.
-
-    Same plan shape as rollup_merge: one union + one hash agg on the
-    key, map-side partials on both sides.
-    """
-    bad = {fn for fn in merge_spec.values() if fn not in _MERGE_FNS}
+    bad = {fn for fn in spec.values() if fn not in _MERGE_FNS}
     if bad:
         raise ValueError(f"unsupported merge fns {sorted(bad)}; use sum/min/max")
-    cols = list(merge_spec)
     return (
-        existing.select(*keys, *cols)
-        .unionByName(batch_partial.select(*keys, *cols))
+        existing.select(*keys, *spec)
+        .unionByName(batch_partial.select(*keys, *spec))
         .groupBy(*keys)
-        .agg(*[_MERGE_FNS[fn](c).alias(c) for c, fn in merge_spec.items()])
+        .agg(*[_MERGE_FNS[fn](c).alias(c) for c, fn in spec.items()])
     )
 
 

@@ -281,7 +281,7 @@ def q_stream_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdir = _mkdtemp("hsp_svocab_")
     ckpt = _mkdtemp("hsp_svocab_ckpt_")
     run_stream_rollup(stream, tdir, ckpt, ["token"], ["freq"], partial)
-    counts = read_table_version(spark, tdir).drop("_batch")
+    counts = read_table_version(spark, tdir)
     w = Window.orderBy(F.col("freq").desc(), F.col("token").asc())
     return counts.select(
         (F.row_number().over(w) - F.lit(1)).cast("long").alias("token_id"),
@@ -2181,22 +2181,17 @@ def q_stream_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME component-contraction step as `incr_golden`
     (:func:`_golden_step` — the batch/incremental/streaming triad that
     scd2_build/scd2_merge/stream_scd2 established, now for MDM
-    survivorship).  Four versioned state tables (bands, component
-    labels, attributes, golden) commit per batch behind a batch-id
-    replay guard; because the step is exact under ANY batch split, the
-    final table must equal the one-shot full-corpus golden build — the
-    oracle is golden_record's SQL verbatim.
+    survivorship).  The four logical state tables (bands, component
+    labels, attributes, golden) commit as one snapshot per batch behind
+    a batch-id replay guard (:func:`golden_apply_batch`); because the
+    step is exact under ANY batch split, the final table must equal the
+    one-shot full-corpus golden build — the oracle is golden_record's
+    SQL verbatim.
 
     Scale: per batch, the delta graph and vote tables are
     batch-bounded; state grows with the corpus (bands/labels/attrs),
     and history is never re-clustered."""
-    from pyspark.sql import types as T
-
-    from hdfs_stream_processing_spark.sources.io import (
-        read_table_version,
-        table_latest_version,
-        write_table_version,
-    )
+    from hdfs_stream_processing_spark.sources.io import read_table_version
     from hdfs_stream_processing_spark.streaming import stream_parquet_source
     from hdfs_stream_processing_spark.streaming.pipeline import run_foreach_batch
 
@@ -2215,9 +2210,7 @@ def q_stream_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     # restored after; the CC calls inside scope their own loop conf).
     with _conf_override(spark, "spark.sql.shuffle.partitions", "8"):
         run_foreach_batch(stream, step, ckpt)
-    return _golden_slice(
-        read_table_version(spark, state).drop("_batch"), "golden"
-    )
+    return _golden_slice(read_table_version(spark, state), "golden")
 
 
 _GOLDEN_STATE_DDL = {
@@ -2274,87 +2267,56 @@ def golden_apply_batch(
     """One streaming golden-maintenance step: fold a document
     micro-batch into the maintained state (bands, component labels,
     attributes, golden) via :func:`_golden_step` and commit ALL FOUR
-    logical tables as ONE immutable combined snapshot stamped with the
-    batch id (r15, VERDICT r14 #6 — the r14 shape committed four
-    separate versioned tables per micro-batch: 4 write jobs, 4 sidecars,
-    4 pointer flips, and a resolve() that had to walk past partially
-    stamped tables after a crash; one multi-schema commit per batch
-    makes the batch atomic BY CONSTRUCTION — the pointer flip is the
-    last step of the single commit, so replay sees either the whole
-    previous state or the whole new one).
-
-    Replay contract: a batch whose id ≤ the committed snapshot's stamp
-    already landed → early-return False.  The stamp comes from the
-    ``_meta.json`` sidecar (driver-side file read); sidecar-less
-    snapshots (pre-r14 layout) fall back to a ``max(_batch)`` scan."""
-    from hdfs_stream_processing_spark.sources.io import (
-        read_table_version,
-        table_latest_version,
-        table_version_meta,
-        write_table_version,
-    )
+    logical tables as ONE immutable combined snapshot, so the batch is
+    atomic by construction: no crash can commit some tables and not
+    others.  Commit, replay guard and vacuum are
+    ``streaming.pipeline._apply_versioned``'s."""
+    from hdfs_stream_processing_spark.streaming.pipeline import _apply_versioned
 
     spark = batch_df.sparkSession
-    latest = table_latest_version(spark, state)
-    if latest is not None:
-        m = table_version_meta(spark, state, latest)
-        if m is not None and "batch" in m:
-            done = m["batch"]
-        else:  # sidecar-less snapshot: derive the stamp from the data
-            done = (
-                read_table_version(spark, state, latest)
-                .select(F.max("_batch"))
-                .first()[0]
-            )
-        if done is not None and done >= batch_id:
-            return False  # this batch's snapshot already published
-        snap = read_table_version(spark, state, latest).drop("_batch")
-        g_old = _golden_slice(snap, "golden")
-        bands_old = _golden_slice(snap, "bands")
-        comp_old = _golden_slice(snap, "comp")
-        attrs_old = _golden_slice(snap, "attrs")
-    else:
-        g_old = spark.createDataFrame([], _GOLDEN_STATE_DDL["golden"])
-        bands_old = spark.createDataFrame([], _GOLDEN_STATE_DDL["bands"])
-        comp_old = spark.createDataFrame([], _GOLDEN_STATE_DDL["comp"])
-        attrs_old = spark.createDataFrame([], _GOLDEN_STATE_DDL["attrs"])
-    batch = batch_df.select("doc_id", "text", "lang", "source", "n_chars")
-    new_golden, new_comp, bands_b = _golden_step(
-        batch, bands_old, comp_old, attrs_old, g_old
-    )
-    # The single write below IS the materialization of every output
-    # (all reads pin the immutable ``v=<latest>/data`` path resolved
-    # above; shared subplans — sig_b, bands_b, mcomp, members — are
-    # reused through their lazy checkpoints inside _golden_step).
-    new_bands = bands_old.unionByName(bands_b)
-    new_attrs = attrs_old.unionByName(
-        batch.select("doc_id", "lang", "source", "n_chars")
-    )
-    packed = (
-        _golden_pack("bands", new_bands)
-        .unionByName(_golden_pack("comp", new_comp))
-        .unionByName(_golden_pack("attrs", new_attrs))
-        .unionByName(_golden_pack("golden", new_golden))
-        .withColumn("_batch", F.lit(batch_id))
-    )
-    # Bound the snapshot's file count: the naive union write emits one
-    # file per upstream partition (measured 34–64 KB-sized files per
-    # snapshot at sf0.1 — the small-files trap of guide §6, paid again
-    # by every later batch's re-read).  repartition — NOT coalesce —
-    # because coalesce would fold the whole narrow upstream (the batch
-    # minhash included) into the few write tasks (measured +2 s/run);
-    # the extra exchange moves only KB–MB of state rows here.  The
-    # count is env-tunable because the right number tracks STATE BYTES
-    # (a production deployment would REBALANCE to the advisory
-    # partition size instead — state there is corpus-sized, here it is
-    # fixture-sized).
-    import os as _os
 
-    n_files = max(1, int(_os.environ.get("HSP_GOLDEN_STATE_FILES", "8")))
-    write_table_version(
-        spark, packed.repartition(n_files), state, meta={"batch": batch_id}
-    )
-    return True
+    def fold(snap: DataFrame | None) -> DataFrame:
+        if snap is not None:
+            g_old, bands_old, comp_old, attrs_old = (
+                _golden_slice(snap, t) for t in ("golden", "bands", "comp", "attrs")
+            )
+        else:
+            g_old, bands_old, comp_old, attrs_old = (
+                spark.createDataFrame([], _GOLDEN_STATE_DDL[t])
+                for t in ("golden", "bands", "comp", "attrs")
+            )
+        batch = batch_df.select("doc_id", "text", "lang", "source", "n_chars")
+        new_golden, new_comp, bands_b = _golden_step(
+            batch, bands_old, comp_old, attrs_old, g_old
+        )
+        # The single write is the materialization of every output (all
+        # reads pin the immutable ``v=<latest>/data`` path; shared
+        # subplans — sig_b, bands_b, mcomp, members — are reused through
+        # their lazy checkpoints inside _golden_step).
+        new_bands = bands_old.unionByName(bands_b)
+        new_attrs = attrs_old.unionByName(
+            batch.select("doc_id", "lang", "source", "n_chars")
+        )
+        packed = (
+            _golden_pack("bands", new_bands)
+            .unionByName(_golden_pack("comp", new_comp))
+            .unionByName(_golden_pack("attrs", new_attrs))
+            .unionByName(_golden_pack("golden", new_golden))
+        )
+        # Bound the snapshot's file count: the naive union write emits
+        # one file per upstream partition (measured 34–64 KB-sized files
+        # per snapshot at sf0.1 — the small-files trap of guide §6, paid
+        # again by every later batch's re-read).  repartition — NOT
+        # coalesce — because coalesce would fold the whole narrow
+        # upstream (the batch minhash included) into the few write tasks
+        # (measured +2 s/run); the extra exchange moves only KB–MB of
+        # state rows here.  The right count tracks STATE BYTES (a
+        # production deployment would REBALANCE to the advisory
+        # partition size — state there is corpus-sized, here it is
+        # fixture-sized, and 8 files hold it).
+        return packed.repartition(8)
+
+    return _apply_versioned(spark, state, batch_id, fold)
 
 # Round 8: MinHash-LSH recall contract, winsorization
 # ========================================================================

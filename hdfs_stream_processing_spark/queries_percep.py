@@ -239,7 +239,7 @@ def q_image_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.{bmp,png}")
-        .load(_stage_tex_mixed(spark, sf_dir))
+        .load(_stage_tex_twins(spark, sf_dir))
     )
     payloads = files.select(
         F.regexp_extract(
@@ -540,8 +540,8 @@ def q_stream_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-batch work is batch-sized (no per-batch LPA — label
     propagation over the full graph is a READ, recomputed on demand,
     the standard lambda-style split); state is edge-cardinality, the
-    graph itself.  A replayed micro-batch is skipped by the _batch
-    guard, so the edge counts stay exact."""
+    graph itself.  A replayed micro-batch is skipped by the batch-id
+    replay guard, so the edge counts stay exact."""
     from hdfs_stream_processing_spark.operators.graph import label_propagation
     from hdfs_stream_processing_spark.sources.io import read_table_version
     from hdfs_stream_processing_spark.streaming import stream_parquet_source
@@ -581,8 +581,8 @@ def q_stream_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     across batches (a document arrives whole in exactly one
     micro-batch, same contract as stream_substring_dedup) and the
     keeper min((doc, offset)) is min-mergeable, so both ride one
-    mixed-merge rollup (streaming/pipeline.py::run_stream_rollup_mixed
-    — sum + min sufficient statistics, replay-guarded by batch id).
+    per-column-merge rollup (streaming/pipeline.py::run_stream_rollup
+    with a sum + min spec — replay-guarded by batch id).
     The scrub against the MAINTAINED table reuses the batch operator
     tail literally (operators/llmdata.py::scrub_with_keepers), so the
     result must equal the one-shot substring_scrub — oracle IS
@@ -598,9 +598,7 @@ def q_stream_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from hdfs_stream_processing_spark.sources.io import read_table_version
     from hdfs_stream_processing_spark.streaming import stream_parquet_source
-    from hdfs_stream_processing_spark.streaming.pipeline import (
-        run_stream_rollup_mixed,
-    )
+    from hdfs_stream_processing_spark.streaming.pipeline import run_stream_rollup
 
     src_dir, schema = _stage_documents(spark, sf_dir)
     stream = stream_parquet_source(spark, src_dir, schema, max_files_per_trigger=2)
@@ -616,12 +614,11 @@ def q_stream_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tdir = _mkdtemp("hsp_sscrub_")
     ckpt = _mkdtemp("hsp_sscrub_ckpt_")
-    run_stream_rollup_mixed(
+    run_stream_rollup(
         stream, tdir, ckpt, ["_sh"], {"nd": "sum", "_keep": "min"}, partial
     )
     dup_keepers = (
         read_table_version(spark, tdir)
-        .drop("_batch")
         .where(F.col("nd") >= F.lit(2))
         .select("_sh", "_keep")
     )
@@ -757,7 +754,7 @@ def q_audio_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cluster_representatives(fp, comps, "source")
 
 
-def _stage_tex_mixed(spark: SparkSession, sf_dir: str) -> str:
+def _stage_tex_twins(spark: SparkSession, sf_dir: str) -> str:
     """Originals as BMP PLUS their 128×96 re-encodes as PNG — the
     landing-zone shape where re-encoded duplicates arrive as their own
     shards in a DIFFERENT, compressed format (r13, VERDICT r12 #3:
@@ -819,7 +816,7 @@ def q_stream_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdfs_stream_processing_spark.sources.io import read_table_version
     from hdfs_stream_processing_spark.streaming.pipeline import run_stream_rollup
 
-    img_dir = _stage_tex_mixed(spark, sf_dir)
+    img_dir = _stage_tex_twins(spark, sf_dir)
     bin_schema = (
         "path string, modificationTime timestamp, length long, content binary"
     )
@@ -863,7 +860,7 @@ ORACLES["stream_image_dedup"] = ORACLES["image_dedup_near"]
 
 def _stage_wave_full(spark: SparkSession, sf_dir: str) -> str:
     """Originals PLUS their 12007-sample resamples as separate WAV
-    files — the audio landing zone mirroring _stage_tex_mixed (both
+    files — the audio landing zone mirroring _stage_tex_twins (both
     clips are WAV: unlike images, the repo's one audio container
     already re-encodes the twin — different byte stream, same
     perceptual fingerprint)."""
@@ -1003,12 +1000,12 @@ def _synth_photo_image(n: int):
     return np.stack([img, img, img], axis=-1).astype(np.uint8)
 
 
-def _stage_photo_jpeg_mixed(spark: SparkSession, sf_dir: str) -> str:
+def _stage_photo_jpeg_twins(spark: SparkSession, sf_dir: str) -> str:
     """Originals as BMP PLUS a baseline-JPEG 4:2:0 quality-85 re-encode
     of each (``srcN_j.jpg``) — the landing-zone shape where duplicates
     arrive through a LOSSY codec: bytes differ, pixels differ, only
     the perceptual layer sees the twin.  Driver work bounded by the
-    distinct-source count (same staging pattern as _stage_tex_mixed)."""
+    distinct-source count (same staging pattern as _stage_tex_twins)."""
     import os as _os
 
     from hdfs_stream_processing_spark.operators.multimodal import (
@@ -1069,7 +1066,7 @@ def q_image_dedup_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.{bmp,jpg}")
-        .load(_stage_photo_jpeg_mixed(spark, sf_dir))
+        .load(_stage_photo_jpeg_twins(spark, sf_dir))
     )
     payloads = files.select(
         F.regexp_extract(
@@ -1136,7 +1133,7 @@ def q_image_dedup_combo(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.{bmp,png}")
-        .load(_stage_tex_mixed(spark, sf_dir))
+        .load(_stage_tex_twins(spark, sf_dir))
     )
     payloads = files.select(
         F.regexp_extract(
@@ -1197,7 +1194,7 @@ def _synth_margin_wave(n: int):
     return np.repeat(vals, seg_len).astype(np.int16)
 
 
-def _stage_wave_adpcm_mixed(spark: SparkSession, sf_dir: str) -> str:
+def _stage_wave_adpcm_twins(spark: SparkSession, sf_dir: str) -> str:
     """PCM16 originals PLUS an IMA-ADPCM re-encode of each
     (``srcN_a.wav``) in ONE landing dir — both are .wav by container,
     different codecs by fmt tag, so the SAME binaryFile scan and the
@@ -1254,7 +1251,7 @@ def q_audio_dedup_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.wav")
-        .load(_stage_wave_adpcm_mixed(spark, sf_dir))
+        .load(_stage_wave_adpcm_twins(spark, sf_dir))
     )
     payloads = files.select(
         F.regexp_extract(F.col("path"), r"([^/]+)\.wav$", 1).alias("source"),

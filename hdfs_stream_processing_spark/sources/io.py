@@ -11,8 +11,6 @@ py4j, no inference passes.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -21,25 +19,23 @@ from hdfs_stream_processing_spark.schemas import DRIVER_TABLES, schema_for
 
 TABLE_NAMES = list(DRIVER_TABLES)
 
-#: Per-session memo of ANALYZED base-table DataFrames (r15, guide §7.3
-#: "driver-side single-process work"): ``spark.read.parquet`` costs
-#: ~85 ms per call (footer/schema resolution + py4j) and every query
-#: invocation re-paid it per table — ~100-200 ms of pure driver latency
-#: per query, the single largest component of the sub-second tail.  A
-#: DataFrame is an immutable LOGICAL PLAN, so reusing the object is
-#: plan-level only: nothing is persisted or .cache()d, every action
-#: still scans the parquet from disk.  Keyed weakly by session (a
-#: closed session's entries vanish with it); the driver tables are
-#: immutable test fixtures, so the pinned file listing cannot go stale
-#: — the same assumption the session's FileStatusCache already makes.
-_TABLE_PLANS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def load_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Parquet scan of one driver table (SURVEY S2), memoized per
-    (session, dir, table) — see :data:`_TABLE_PLANS`.
+    (session, dir, table).
+
+    The memo holds ANALYZED base-table DataFrames (r15, guide §7.3
+    "driver-side single-process work"): ``spark.read.parquet`` costs
+    ~85 ms per call (footer/schema resolution + py4j) and every query
+    invocation re-paid it per table — ~100-200 ms of pure driver
+    latency per query, the single largest component of the sub-second
+    tail.  A DataFrame is an immutable LOGICAL PLAN, so reusing the
+    object is plan-level only: nothing is persisted or .cache()d, every
+    action still scans the parquet from disk.  The memo hangs on the
+    session object itself, so it is collected with the session (a
+    global map keyed by session would be pinned by its own values,
+    which reference the session); the driver tables are immutable test
+    fixtures, so the pinned file listing cannot go stale — the same
+    assumption the session's FileStatusCache already makes.
 
     Parquet is self-describing, so no schema argument: Catalyst still gets
     column pruning + predicate pushdown from the footer metadata.
@@ -59,7 +55,7 @@ def load_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
       funnel lags) sees the exact integer microsecond it would read
       straight from the file.
     """
-    per = _TABLE_PLANS.setdefault(spark, {})
+    per = vars(spark).setdefault("_hsp_table_plans", {})
     cached = per.get((sf_dir, table))
     if cached is not None:
         return cached
@@ -437,9 +433,8 @@ def table_version_meta(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> dict | None:
     """Commit metadata of a snapshot (``v=<n>/_meta.json``), or None
-    when the snapshot was written without ``meta`` — callers that need
-    a fact recorded there must fall back to deriving it from the data
-    (the pre-r14 snapshots carry no sidecar)."""
+    when the table has no commit or the snapshot was written without
+    ``meta``."""
     import json as _json
 
     v = version if version is not None else table_latest_version(spark, table_dir)
@@ -462,8 +457,11 @@ def table_version_meta(
 def vacuum_table_versions(
     spark: SparkSession, table_dir: str, keep_last: int = 2
 ) -> list[int]:
-    """Retire all but the newest ``keep_last`` snapshots (never the
-    published one); returns the versions removed.  Partition-dir
+    """Retire every snapshot older than the newest ``keep_last`` (never
+    the published one); returns the versions removed, sorted.  One
+    listing of the table dir finds them — stray older versions a crash
+    between commit and vacuum left behind included — so the cost does
+    not grow with the number of versions ever written.  Partition-dir
     deletes only — data files of retained versions are never touched.
     """
     if keep_last < 1:
@@ -472,11 +470,10 @@ def vacuum_table_versions(
     if latest is None:
         return []
     jvm, fs = _fs_for(spark, table_dir)
-    base = table_dir.rstrip("/")
     removed = []
-    for v in range(1, max(1, latest - keep_last + 1)):
-        p = jvm.org.apache.hadoop.fs.Path(f"{base}/v={v}")
-        if fs.exists(p):
-            fs.delete(p, True)
-            removed.append(v)
-    return removed
+    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(table_dir)):
+        name = st.getPath().getName()
+        if name.startswith("v=") and int(name[2:]) <= latest - keep_last:
+            fs.delete(st.getPath(), True)
+            removed.append(int(name[2:]))
+    return sorted(removed)

@@ -666,19 +666,48 @@ def vacuum_cdc_tombstones(
     return n_dead
 
 
-def _committed_batch(spark, table_dir: str, version: int, existing: DataFrame):
-    """The micro-batch id a committed snapshot carries — from the
-    ``_meta.json`` sidecar when present (one driver-side file read,
-    r14 optimization), else from a ``max(_batch)`` scan of the data
-    (pre-r14 snapshots have no sidecar).  The ``_batch`` column is
-    written as a constant literal per snapshot, so the two reads are
-    definitionally equal whenever both exist."""
-    from hdfs_stream_processing_spark.sources.io import table_version_meta
+def _apply_versioned(spark: SparkSession, table_dir: str, batch_id: int, fold) -> bool:
+    """The one commit step of every replay-guarded maintained stream
+    table: fold a micro-batch into the table's published snapshot and
+    commit the result as the next immutable version (``v=<n>`` behind
+    the ``_latest`` pointer, :func:`sources.io.write_table_version`).
 
-    m = table_version_meta(spark, table_dir, version)
-    if m is not None and "batch" in m:
-        return m["batch"]
-    return existing.agg(F.max("_batch")).collect()[0][0]  # 1 row
+    1. the pointer is resolved once;
+    2. the published snapshot's batch stamp is read from its
+       ``_meta.json`` sidecar — a published snapshot without one raises,
+       because nothing else records which batch produced it;
+    3. a ``batch_id`` at or below the stamp already produced a published
+       snapshot (a replay after a crash between commit and checkpoint)
+       and returns False without folding — maintained merges are not
+       replay-idempotent (sums double-count, SCD2 would replay history
+       out of order);
+    4. ``fold(existing)`` builds the new table from the published
+       snapshot, or from ``None`` on the first commit;
+    5. the result is written stamped ``{"batch": batch_id}`` and all but
+       the last two versions are vacuumed.
+
+    The pointer flip is the last step of the single write, so a crash
+    leaves either the whole previous snapshot or the whole new one.
+    Returns True when a snapshot was committed."""
+    from hdfs_stream_processing_spark.sources import io as sio
+
+    latest = sio.table_latest_version(spark, table_dir)
+    existing = None
+    if latest is not None:
+        meta = sio.table_version_meta(spark, table_dir, latest)
+        if meta is None or "batch" not in meta:
+            raise RuntimeError(
+                f"{table_dir} v={latest}: published snapshot has no batch "
+                "stamp in its _meta.json sidecar"
+            )
+        if batch_id <= meta["batch"]:
+            return False
+        existing = sio.read_table_version(spark, table_dir, latest)
+    sio.write_table_version(
+        spark, fold(existing), table_dir, meta={"batch": batch_id}
+    )
+    sio.vacuum_table_versions(spark, table_dir, keep_last=2)
+    return True
 
 
 def scd2_apply_batch(
@@ -696,19 +725,8 @@ def scd2_apply_batch(
 
     First batch bootstraps the dimension with ``scd2_build``; every
     later batch folds in through ``scd2_merge`` — history is never
-    rebuilt.  Each step commits a NEW immutable snapshot through the
-    versioned-table pointer protocol (``write_table_version``), so a
-    reader mid-merge sees the previous complete dimension, never a
-    half-written one, and the dimension gets time travel for free.
-
-    Replay safety: an SCD2 merge is not content-idempotent (re-merging
-    an already-absorbed change set against the updated open versions
-    would replay history out of order), so each snapshot records the
-    micro-batch id that produced it in ``_batch``; a batch whose id ≤
-    the committed ``_batch`` already produced a published snapshot and
-    is skipped (same guard family as ``run_continuous_rollup``'s
-    last_batch, here table-level because the commit is all-or-nothing).
-    Old snapshots are vacuumed to the last two.
+    rebuilt.  Commit, replay guard and vacuum are
+    :func:`_apply_versioned`'s.
 
     Ordering contract (inherited from ``scd2_merge``): batches arrive
     per-key in ``ts_col`` order.  Out-of-order arrivals must be routed
@@ -721,34 +739,15 @@ def scd2_apply_batch(
         scd2_build,
         scd2_merge,
     )
-    from hdfs_stream_processing_spark.sources.io import (
-        read_table_version,
-        table_latest_version,
-        vacuum_table_versions,
-        write_table_version,
-    )
 
-    spark = batch_df.sparkSession
-    latest = table_latest_version(spark, table_dir)
-    if latest is None:
-        merged = scd2_build(batch_df, key_cols, ts_col, attr_col, tiebreak_cols)
-    else:
-        existing = read_table_version(spark, table_dir, latest)
-        last_batch = _committed_batch(spark, table_dir, latest, existing)
-        if last_batch is not None and batch_id <= last_batch:
-            return False  # replayed batch: snapshot already published
-        merged = scd2_merge(
-            existing.drop("_batch"), batch_df, key_cols, ts_col, attr_col,
-            tiebreak_cols,
+    def fold(existing: DataFrame | None) -> DataFrame:
+        if existing is None:
+            return scd2_build(batch_df, key_cols, ts_col, attr_col, tiebreak_cols)
+        return scd2_merge(
+            existing, batch_df, key_cols, ts_col, attr_col, tiebreak_cols
         )
-    write_table_version(
-        spark,
-        merged.withColumn("_batch", F.lit(batch_id).cast("long")),
-        table_dir,
-        meta={"batch": batch_id},
-    )
-    vacuum_table_versions(spark, table_dir, keep_last=2)
-    return True
+
+    return _apply_versioned(batch_df.sparkSession, table_dir, batch_id, fold)
 
 
 def run_stream_scd2(
@@ -764,7 +763,8 @@ def run_stream_scd2(
     dimension — the stream-side completion of the scd2_build /
     scd2_merge pair, matching stream_cdc's batch/stream symmetry for
     snapshot tables.  availableNow; see :func:`scd2_apply_batch` for
-    the per-batch merge, commit, replay, and ordering contracts."""
+    the per-batch merge, commit, replay, and ordering contracts.  The
+    live dimension is ``sources.io.read_table_version(table_dir)``."""
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         scd2_apply_batch(
@@ -775,134 +775,34 @@ def run_stream_scd2(
     run_foreach_batch(df, step, checkpoint_dir)
 
 
-def read_scd2_snapshot(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Read the live dimension a :func:`run_stream_scd2` target
-    publishes (latest committed snapshot, bookkeeping column dropped)."""
-    from hdfs_stream_processing_spark.sources.io import read_table_version
-
-    return read_table_version(spark, table_dir).drop("_batch")
-
-
 def rollup_apply_batch(
     batch_partial: DataFrame,
     table_dir: str,
     key_cols: list[str],
-    sum_cols: list[str],
+    sum_cols: list[str] | dict[str, str],
     batch_id: int = 0,
 ) -> bool:
     """One streaming materialized-rollup step: fold a micro-batch's
     PARTIAL aggregate into the stored rollup via ``rollup_merge`` and
-    commit the result as a new immutable snapshot (versioned-table
-    pointer).  Additive merges are not replay-idempotent (re-adding a
-    batch double-counts), so the committed snapshot carries the batch
-    id in ``_batch`` and a replayed id is skipped — same guard as
-    :func:`scd2_apply_batch`, complementary to
-    :func:`run_continuous_rollup`'s per-key last_batch (that one scopes
-    partition rewrites; this one is table-snapshot-atomic and gives the
-    rollup time travel).
+    commit the result through :func:`_apply_versioned` (replay guard,
+    snapshot commit, vacuum).  ``sum_cols`` is a list of summed columns
+    or a ``{col: "sum"|"min"|"max"}`` spec — the min/max legs are what
+    keeper-style state needs (e.g. the streaming substring-scrub keeper
+    min).  Complementary to :func:`run_continuous_rollup`'s per-key
+    last_batch (that one scopes partition rewrites; this one is
+    table-snapshot-atomic and gives the rollup time travel).
 
     Scale: input is batch-sized partials; the stored table is
     group-cardinality-sized.  The merge is one union + one hash agg —
     history is never re-aggregated.  Returns False on a replay skip."""
     from hdfs_stream_processing_spark.operators.incremental import rollup_merge
-    from hdfs_stream_processing_spark.sources.io import (
-        read_table_version,
-        table_latest_version,
-        vacuum_table_versions,
-        write_table_version,
-    )
 
-    spark = batch_partial.sparkSession
-    latest = table_latest_version(spark, table_dir)
-    if latest is None:
-        merged = batch_partial.select(*key_cols, *sum_cols)
-    else:
-        existing = read_table_version(spark, table_dir, latest)
-        last_batch = _committed_batch(spark, table_dir, latest, existing)
-        if last_batch is not None and batch_id <= last_batch:
-            return False
-        merged = rollup_merge(
-            existing.drop("_batch"), batch_partial, key_cols, sum_cols
-        )
-    write_table_version(
-        spark,
-        merged.withColumn("_batch", F.lit(batch_id).cast("long")),
-        table_dir,
-        meta={"batch": batch_id},
-    )
-    vacuum_table_versions(spark, table_dir, keep_last=2)
-    return True
+    def fold(existing: DataFrame | None) -> DataFrame:
+        if existing is None:
+            return batch_partial.select(*key_cols, *sum_cols)
+        return rollup_merge(existing, batch_partial, key_cols, sum_cols)
 
-
-def rollup_apply_batch_mixed(
-    batch_partial: DataFrame,
-    table_dir: str,
-    key_cols: list[str],
-    merge_spec: dict[str, str],
-    batch_id: int = 0,
-) -> bool:
-    """:func:`rollup_apply_batch` with per-column merge functions
-    (sum/min/max via ``rollup_merge_mixed``, round 12) — the variant
-    keeper-style state needs (e.g. the streaming substring-scrub
-    keeper min).  Same replay guard: the committed snapshot carries
-    ``_batch`` and a replayed id is skipped, which stays idempotent
-    for min/max exactly as for sums (re-merging a batch would be
-    harmless for min/max but double-counts sums, so the guard is
-    load-bearing whenever the spec mixes them).
-
-    Scale: identical to rollup_apply_batch — batch-sized input, one
-    union + one hash agg, group-cardinality-sized state."""
-    from hdfs_stream_processing_spark.operators.incremental import (
-        rollup_merge_mixed,
-    )
-    from hdfs_stream_processing_spark.sources.io import (
-        read_table_version,
-        table_latest_version,
-        vacuum_table_versions,
-        write_table_version,
-    )
-
-    cols = list(merge_spec)
-    spark = batch_partial.sparkSession
-    latest = table_latest_version(spark, table_dir)
-    if latest is None:
-        merged = batch_partial.select(*key_cols, *cols)
-    else:
-        existing = read_table_version(spark, table_dir, latest)
-        last_batch = _committed_batch(spark, table_dir, latest, existing)
-        if last_batch is not None and batch_id <= last_batch:
-            return False
-        merged = rollup_merge_mixed(
-            existing.drop("_batch"), batch_partial, key_cols, merge_spec
-        )
-    write_table_version(
-        spark,
-        merged.withColumn("_batch", F.lit(batch_id).cast("long")),
-        table_dir,
-        meta={"batch": batch_id},
-    )
-    vacuum_table_versions(spark, table_dir, keep_last=2)
-    return True
-
-
-def run_stream_rollup_mixed(
-    df: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-    merge_spec: dict[str, str],
-    partial_fn,
-) -> None:
-    """:func:`run_stream_rollup` with per-column merge functions —
-    availableNow micro-batches folded through
-    :func:`rollup_apply_batch_mixed`."""
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        rollup_apply_batch_mixed(
-            partial_fn(batch_df), table_dir, key_cols, merge_spec, batch_id
-        )
-
-    run_foreach_batch(df, step, checkpoint_dir)
+    return _apply_versioned(batch_partial.sparkSession, table_dir, batch_id, fold)
 
 
 def run_stream_rollup(
@@ -910,15 +810,16 @@ def run_stream_rollup(
     table_dir: str,
     checkpoint_dir: str,
     key_cols: list[str],
-    sum_cols: list[str],
+    sum_cols: list[str] | dict[str, str],
     partial_fn,
 ) -> None:
     """Streaming incremental view maintenance: ``partial_fn`` reduces
     each micro-batch to its partial aggregate (same function a batch
     backfill uses), :func:`rollup_apply_batch` folds it into the stored
-    rollup.  availableNow.  Derived rankings/ratios are computed by
-    READERS of the rollup (top-k, avg = sum/n, ...) — the state is
-    sufficient statistics only."""
+    rollup (``sum_cols`` as there: a list of sums or a per-column
+    sum/min/max spec).  availableNow.  Derived rankings/ratios are
+    computed by READERS of the rollup (top-k, avg = sum/n, ...) — the
+    state is sufficient statistics only."""
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         rollup_apply_batch(

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from hdfs_stream_processing_spark.operators.dedup import banded_hamming_pairs
 from hdfs_stream_processing_spark.operators.graph import label_propagation
-from hdfs_stream_processing_spark.operators.incremental import rollup_merge_mixed
+from hdfs_stream_processing_spark.operators.incremental import rollup_merge
 from hdfs_stream_processing_spark.operators.llmdata import (
     scrub_spans,
     scrub_with_keepers,
@@ -264,13 +264,13 @@ def test_rollup_merge_mixed_min_max_sum(spark):
     )
     got = {
         r["k"]: (r["n"], r["lo"], r["hi"])
-        for r in rollup_merge_mixed(
+        for r in rollup_merge(
             existing, batch, ["k"], {"n": "sum", "lo": "min", "hi": "max"}
         ).collect()
     }
     assert got == {"k1": (5, 4, 9), "k2": (1, 7, 7), "k3": (1, 1, 1)}
     with pytest.raises(ValueError, match="merge fns"):
-        rollup_merge_mixed(existing, batch, ["k"], {"n": "avg"})
+        rollup_merge(existing, batch, ["k"], {"n": "avg"})
 
 
 def test_scrub_with_keepers_equals_scrub_spans(spark):
@@ -311,9 +311,7 @@ def test_scrub_with_keepers_equals_scrub_spans(spark):
 
 def test_rollup_apply_batch_mixed_replay_guard(spark, tmp_path):
     from hdfs_stream_processing_spark.sources.io import read_table_version
-    from hdfs_stream_processing_spark.streaming.pipeline import (
-        rollup_apply_batch_mixed,
-    )
+    from hdfs_stream_processing_spark.streaming.pipeline import rollup_apply_batch
 
     tdir = str(tmp_path / "rollup")
     spec = {"nd": "sum", "keepkey": "min"}
@@ -323,13 +321,13 @@ def test_rollup_apply_batch_mixed_replay_guard(spark, tmp_path):
     b1 = spark.createDataFrame(
         [("w1", 2, 50)], "k string, nd long, keepkey long"
     )
-    assert rollup_apply_batch_mixed(b0, tdir, ["k"], spec, batch_id=0)
-    assert rollup_apply_batch_mixed(b1, tdir, ["k"], spec, batch_id=1)
+    assert rollup_apply_batch(b0, tdir, ["k"], spec, batch_id=0)
+    assert rollup_apply_batch(b1, tdir, ["k"], spec, batch_id=1)
     # replay of batch 1 must be skipped, not re-merged
-    assert not rollup_apply_batch_mixed(b1, tdir, ["k"], spec, batch_id=1)
+    assert not rollup_apply_batch(b1, tdir, ["k"], spec, batch_id=1)
     got = {
         r["k"]: (r["nd"], r["keepkey"])
-        for r in read_table_version(spark, tdir).drop("_batch").collect()
+        for r in read_table_version(spark, tdir).collect()
     }
     assert got == {"w1": (3, 50), "w2": (2, 205)}
 
@@ -411,18 +409,16 @@ def test_rollup_mixed_struct_min_keeper_survives_wide_offsets(spark, tmp_path):
     LOSE to doc 2 at offset 0 (2,000,000) — the struct min must pick
     (1, 1500000), proving no offset-width invariant is load-bearing."""
     from hdfs_stream_processing_spark.sources.io import read_table_version
-    from hdfs_stream_processing_spark.streaming.pipeline import (
-        rollup_apply_batch_mixed,
-    )
+    from hdfs_stream_processing_spark.streaming.pipeline import rollup_apply_batch
 
     tdir = str(tmp_path / "keepers")
     spec = {"nd": "sum", "_keep": "min"}
     schema = "k string, nd long, _keep struct<d: bigint, o: int>"
     b0 = spark.createDataFrame([("w1", 1, (2, 0))], schema)
     b1 = spark.createDataFrame([("w1", 1, (1, 1_500_000))], schema)
-    assert rollup_apply_batch_mixed(b0, tdir, ["k"], spec, batch_id=0)
-    assert rollup_apply_batch_mixed(b1, tdir, ["k"], spec, batch_id=1)
-    rows = read_table_version(spark, tdir).drop("_batch").collect()
+    assert rollup_apply_batch(b0, tdir, ["k"], spec, batch_id=0)
+    assert rollup_apply_batch(b1, tdir, ["k"], spec, batch_id=1)
+    rows = read_table_version(spark, tdir).collect()
     assert len(rows) == 1
     assert rows[0]["nd"] == 2
     assert (rows[0]["_keep"]["d"], rows[0]["_keep"]["o"]) == (1, 1_500_000)

@@ -1,5 +1,7 @@
 """Schema registry + IO round-trip (SURVEY §1.3, S1-S3)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -191,9 +193,40 @@ def test_versioned_table_commit_time_travel_vacuum(spark, tmp_path):
     assert removed == [1]
     assert read_table_version(spark, tdir, version=2).count() == 5
     assert read_table_version(spark, tdir).count() == 7
-    import pytest
     with pytest.raises(Exception):
         read_table_version(spark, tdir, version=1).count()
+    # a crash between commit and vacuum leaves older versions behind:
+    # v=2 and v=3 outlive the v=4 commit whose vacuum never ran, and a
+    # stray v=1 reappears; the next vacuum retires all of them
+    assert write_table_version(spark, d1, tdir) == 4
+    os.makedirs(os.path.join(tdir, "v=1", "data"))
+    assert write_table_version(spark, d2, tdir) == 5
+    assert vacuum_table_versions(spark, tdir, keep_last=2) == [1, 2, 3]
+    assert sorted(d for d in os.listdir(tdir) if d.startswith("v=")) == [
+        "v=4", "v=5",
+    ]
+    assert read_table_version(spark, tdir).count() == 5
+
+
+def test_load_table_memo_dies_with_its_session(spark):
+    """load_table's plan memo lives on its session: repeat calls hit it,
+    and a dropped session is still collectable (a global map keyed by
+    session would pin it through its own DataFrame values)."""
+    import gc
+    import weakref
+
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    s2 = spark.newSession()
+    df = load_table(s2, SF_DIR, "region")
+    assert load_table(s2, SF_DIR, "region") is df
+    ref = weakref.ref(s2)
+    del s2, df
+    # PySpark binds RDD.toDF to the newest session it constructed, which
+    # pins that session on its own; point it back at the shared one
+    _monkey_patch_RDD(spark)
+    gc.collect()
+    assert ref() is None
 
 
 def test_corrupt_json_lines_are_quarantined_not_dropped(spark):

@@ -3,14 +3,13 @@
 ``write_table_version(meta=...)`` records small commit facts (the
 streaming batch id) in ``v=<n>/_meta.json`` so replay guards resolve
 them with one driver-side file read instead of a Spark job per table
-per micro-batch; pre-r14 snapshots carry no sidecar and every guard
-falls back to the ``max(_batch)`` scan.
+per micro-batch.  The sidecar is the only record of the batch stamp, so
+a maintained snapshot published without one cannot be guarded.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from hdfs_stream_processing_spark import get_spark
 
@@ -41,9 +40,11 @@ def test_meta_roundtrip_and_absence(spark, tmp_path):
     assert read_table_version(spark, tdir, 3).columns == ["k", "v"]
 
 
-def test_rollup_replay_guard_without_sidecar(spark, tmp_path):
-    """A pre-r14 snapshot (no _meta.json) must still arm the replay
-    guard through the max(_batch) fallback scan."""
+def test_maintained_snapshot_without_sidecar_raises(spark, tmp_path):
+    """The replay guard of a maintained stream table reads the batch
+    stamp from the published snapshot's sidecar only: a snapshot
+    published without one makes the next apply raise, and nothing is
+    folded in or committed."""
     from hdfs_stream_processing_spark.sources.io import (
         read_table_version,
         table_latest_version,
@@ -52,25 +53,13 @@ def test_rollup_replay_guard_without_sidecar(spark, tmp_path):
     from hdfs_stream_processing_spark.streaming.pipeline import rollup_apply_batch
 
     tdir = str(tmp_path / "roll")
-    # simulate a pre-r14 commit: data carries _batch, no sidecar
-    seed = spark.createDataFrame([("a", 2)], "k string, n long").withColumn(
-        "_batch", F.lit(0).cast("long")
-    )
-    write_table_version(spark, seed, tdir)
+    seed = spark.createDataFrame([("a", 2)], "k string, n long")
+    write_table_version(spark, seed, tdir)  # no meta sidecar
 
     batch = spark.createDataFrame([("a", 3), ("b", 1)], "k string, n long")
-    # replay of batch 0 must be skipped via the fallback scan
-    assert not rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=0)
+    for bid in (0, 1):
+        with pytest.raises(RuntimeError, match="_meta.json"):
+            rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=bid)
     assert table_latest_version(spark, tdir) == 1
-    # batch 1 folds in and commits WITH the sidecar
-    assert rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=1)
-    from hdfs_stream_processing_spark.sources.io import table_version_meta
-
-    assert table_version_meta(spark, tdir, 2) == {"batch": 1}
-    got = {
-        r["k"]: r["n"]
-        for r in read_table_version(spark, tdir).drop("_batch").collect()
-    }
-    assert got == {"a": 5, "b": 1}
-    # replaying batch 1 is now guarded by the sidecar alone
-    assert not rollup_apply_batch(batch, tdir, ["k"], ["n"], batch_id=1)
+    got = {r["k"]: r["n"] for r in read_table_version(spark, tdir).collect()}
+    assert got == {"a": 2}

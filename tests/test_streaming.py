@@ -1,6 +1,8 @@
 """Structured Streaming semantics (SURVEY §2.9): batch-stream parity,
 north-star parquet sink exactly-once, streaming dedup, watermark windows."""
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -645,11 +647,11 @@ def test_stream_scd2_split_invariance_and_replay(spark, tmp_path):
     import datetime as dt
 
     from hdfs_stream_processing_spark.operators.incremental import scd2_build
-    from hdfs_stream_processing_spark.sources.io import table_latest_version
-    from hdfs_stream_processing_spark.streaming.pipeline import (
-        read_scd2_snapshot,
-        scd2_apply_batch,
+    from hdfs_stream_processing_spark.sources.io import (
+        read_table_version,
+        table_latest_version,
     )
+    from hdfs_stream_processing_spark.streaming.pipeline import scd2_apply_batch
 
     t0 = dt.datetime(2024, 1, 1)
     log = [
@@ -677,7 +679,7 @@ def test_stream_scd2_split_invariance_and_replay(spark, tmp_path):
             )
             lo = hi
         got = sorted(
-            read_scd2_snapshot(spark, tdir).collect(),
+            read_table_version(spark, tdir).collect(),
             key=lambda r: (r["k"], r["valid_from"]),
         )
         assert got == want, f"split {split}"
@@ -691,7 +693,7 @@ def test_stream_scd2_split_invariance_and_replay(spark, tmp_path):
     )
     assert table_latest_version(spark, tdir) == v_before
     got = sorted(
-        read_scd2_snapshot(spark, tdir).collect(),
+        read_table_version(spark, tdir).collect(),
         key=lambda r: (r["k"], r["valid_from"]),
     )
     assert got == want
@@ -727,7 +729,7 @@ def test_stream_rollup_split_invariance_and_replay(spark, tmp_path):
             lo = hi
         got = {
             (r["g"], r["t"]): r["n"]
-            for r in read_table_version(spark, tdir).drop("_batch").collect()
+            for r in read_table_version(spark, tdir).collect()
         }
         assert got == want, f"split {split}"
 
@@ -741,7 +743,7 @@ def test_stream_rollup_split_invariance_and_replay(spark, tmp_path):
     assert table_latest_version(spark, tdir) == v
     got = {
         (r["g"], r["t"]): r["n"]
-        for r in read_table_version(spark, tdir).drop("_batch").collect()
+        for r in read_table_version(spark, tdir).collect()
     }
     assert got == want
 
@@ -752,9 +754,8 @@ def test_stream_golden_split_invariance_and_crash_replay(spark, tmp_path):
     full build; a replayed absorbed batch commits nothing; exactly ONE
     combined snapshot commits per batch (r15 single-commit contract —
     a crash can no longer stamp some tables and not others, because the
-    pointer flip is the last step of the one commit); and a
-    sidecar-less snapshot's replay guard falls back to the max(_batch)
-    scan."""
+    pointer flip is the last step of the one commit); and old snapshots
+    are vacuumed, so the state dir keeps at most two."""
     from hdfs_stream_processing_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signature_wide,
@@ -767,7 +768,6 @@ def test_stream_golden_split_invariance_and_crash_replay(spark, tmp_path):
     from hdfs_stream_processing_spark.sources.io import (
         read_table_version,
         table_latest_version,
-        write_table_version,
     )
     from pyspark.sql import functions as F
 
@@ -806,9 +806,7 @@ def test_stream_golden_split_invariance_and_crash_replay(spark, tmp_path):
 
     def golden_of(state):
         return sorted(
-            _golden_slice(
-                read_table_version(spark, state).drop("_batch"), "golden"
-            ).collect()
+            _golden_slice(read_table_version(spark, state), "golden").collect()
         )
 
     def run_split(split, tag):
@@ -825,6 +823,9 @@ def test_stream_golden_split_invariance_and_crash_replay(spark, tmp_path):
         assert golden_of(state) == want, f"split {split}"
         # single-commit contract: exactly one snapshot per micro-batch
         assert table_latest_version(spark, state) == len(split)
+        # vacuumed after every commit: at most two snapshots remain
+        kept = [d for d in os.listdir(state) if d.startswith("v=")]
+        assert len(kept) <= 2, kept
 
     # replay guard: re-applying an absorbed batch commits nothing
     state = run_split([3, 6], "replay")
@@ -832,16 +833,6 @@ def test_stream_golden_split_invariance_and_crash_replay(spark, tmp_path):
     assert not golden_apply_batch(spark.createDataFrame(rows[3:6], ddl), state, 1)
     assert table_latest_version(spark, state) == v
 
-    # sidecar-less snapshot (pre-r14 layout): replay guard must fall
-    # back to the max(_batch) scan — re-commit the same content via a
-    # BARE write_table_version (no meta), then replay batch 1
-    state = run_split([3, 6], "fallback")
-    snap = read_table_version(spark, state)
-    write_table_version(spark, snap, state)  # no meta sidecar
-    v = table_latest_version(spark, state)
-    assert not golden_apply_batch(spark.createDataFrame(rows[3:6], ddl), state, 1)
-    assert table_latest_version(spark, state) == v
-    assert golden_of(state) == want
 
 
 def test_stream_ivf_equals_one_shot_assignment(spark):
